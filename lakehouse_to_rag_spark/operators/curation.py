@@ -459,6 +459,7 @@ def admit_batch(
     from lakehouse_to_rag_spark.sources.lakehouse import (
         _recover_dir_swap,
         read_layer,
+        read_partitions,
         write_layer,
     )
 
@@ -489,14 +490,12 @@ def admit_batch(
             r["bucket"]
             for r in keyed.select("bucket").distinct().collect()
         )
-        # partition pruning at file-listing time; the explicit schema
-        # skips planning-time footer sampling of cold buckets
-        snapshot = (
-            spark.read.schema("content_fp string, bucket int")
-            .parquet(fp_table_path)
-            .filter(F.col("bucket").isin(in_buckets))
-            .select("content_fp")
-        )
+        # only the incoming buckets' dirs are listed; the explicit
+        # schema skips planning-time footer sampling of cold buckets
+        snapshot = read_partitions(
+            spark, fp_table_path, "bucket", in_buckets,
+            schema="content_fp string, bucket int", fmt="parquet",
+        ).select("content_fp")
     else:
         snapshot = spark.createDataFrame([], "content_fp string")
     admitted = _keep_first_fresh(keyed, snapshot, id_col)
@@ -1088,7 +1087,14 @@ def write_training_shards(
     describes it; remnants of a crashed swap are healed by
     ``_recover_dir_swap`` on the next call (the upsert/compact
     recovery contract). Returns the manifest:
-    (shard, n_docs, n_tokens, id_hash)."""
+    (shard, n_docs, n_tokens, id_hash).
+
+    Shard ids may be SPARSE: a document is assigned by its first
+    token (``shard = cum_start div token_budget``), so a document of
+    at least 2x ``token_budget`` tokens spans shard ids that no
+    document starts in, and those ids have no ``shard=N/`` directory.
+    The ``_manifest`` is the shard list; never enumerate
+    ``range(max_shard + 1)``."""
     import os
     import shutil
     import uuid

@@ -2169,6 +2169,7 @@ def admit_media_batch(
     from lakehouse_to_rag_spark.sources.lakehouse import (
         _recover_dir_swap,
         read_layer,
+        read_partitions,
         write_layer,
     )
 
@@ -2214,19 +2215,16 @@ def admit_media_batch(
             .distinct()
             .collect()
         )
-        # partition pruning at file-listing time: only the colliding
-        # bucket=N/ directories are ever opened. The explicit schema
-        # also skips planning-time footer sampling — without it Spark
-        # would open a footer from an arbitrary (possibly cold) file
-        # just to infer the fixed, known layout.
-        snap_bands = (
-            spark.read.schema(
-                "id long, simhash long, blk int, bval long, bucket int"
-            )
-            .parquet(sig_table_path)
-            .filter(F.col("bucket").isin(inc_buckets))
-            .select("simhash", "blk", "bval")
-        )
+        # only the colliding bucket=N/ directories are listed and
+        # opened. The explicit schema also skips planning-time footer
+        # sampling — without it Spark would open a footer from an
+        # arbitrary (possibly cold) file just to infer the fixed,
+        # known layout.
+        snap_bands = read_partitions(
+            spark, sig_table_path, "bucket", inc_buckets,
+            schema="id long, simhash long, blk int, bval long, bucket int",
+            fmt="parquet",
+        ).select("simhash", "blk", "bval")
     else:
         snap_bands = spark.createDataFrame(
             [], "simhash long, blk int, bval long"

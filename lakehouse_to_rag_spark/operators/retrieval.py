@@ -167,11 +167,12 @@ def write_bm25_index(
     ``{path}/bucket=N/`` holds the postings whose word hashes to
     bucket N (``pmod(xxhash64(word), n_buckets)``) and
     ``{path}/_stats`` the one-row corpus statistics
-    (n_docs, avgdl, n_buckets). Directory-level partition pruning
-    means a query LISTS only the buckets its terms hash to, so scan
-    cost scales with query-term count, not corpus size (a metastore
-    ``bucketBy`` would pin the same shape but not survive a fresh
-    session on a bare path).
+    (n_docs, avgdl, n_buckets). ``bm25_topk_from_index`` lists and
+    scans only the ``bucket=N`` dirs its terms hash to
+    (``sources.lakehouse.read_partitions``), so serve cost scales with
+    query-term count, not corpus size (a metastore ``bucketBy`` would
+    pin the same shape but not survive a fresh session on a bare
+    path).
 
     Postings are denormalized — (word, id, tf, dl, df) — the classic
     search-engine layout (Lucene stores per-doc norms alongside
@@ -616,13 +617,13 @@ def bm25_topk_from_index(
     """Serve BM25 top-k from a ``write_bm25_index`` layout. The query
     terms' bucket ids (a driver-side list bounded by the query-term
     count — the same legitimately tiny collect as the IVF probe list)
-    become a LITERAL ``isin`` partition filter, so Catalyst prunes
-    non-matching ``bucket=N`` directories at file-listing time; the
-    scoring tail is byte-identical to ``bm25_topk`` (shared
-    ``_score_hits``), so persisted == in-memory exactly."""
+    name the only ``bucket=N`` directories that are listed and scanned
+    (``read_partitions``; a bucket with no directory contributes no
+    postings). The scoring tail is byte-identical to ``bm25_topk``
+    (shared ``_score_hits``), so persisted == in-memory exactly."""
     import os
 
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
+    from lakehouse_to_rag_spark.sources.lakehouse import read_partitions
 
     # one-row control state via parquet footers (r14, guide §5): the
     # Spark read + collect + broadcast of a 40-byte row cost a
@@ -637,7 +638,7 @@ def bm25_topk_from_index(
     buckets = sorted(
         r["bucket"] for r in qterms.select("bucket").distinct().collect()
     )
-    postings = read_layer(spark, path).filter(F.col("bucket").isin(buckets))
+    postings = read_partitions(spark, path, "bucket", buckets)
     # df is recomputed from the pruned scan, never trusted from the
     # stored column: appends (append_to_bm25_index) change every
     # term's document frequency but cannot rewrite existing posting

@@ -319,10 +319,10 @@ def write_ivf_index(
     ``{path}/_centroids`` the quantizer (underscore prefix = invisible
     to readers of the corpus root, the same convention parquet uses
     for ``_SUCCESS``). This is the 100 TB layout the probe path needs:
-    directory-level partition pruning means a probe LISTS (not just
-    skips) only nprobe of num_centroids directories, so scan cost
-    scales with probed fraction, not corpus size. Returns the format
-    written.
+    ``ivf_topk_from_index`` lists and scans only the probed
+    ``cluster=N`` directories (``sources.lakehouse.read_partitions``),
+    so scan cost scales with probed fraction, not corpus size. Returns
+    the format written.
 
     ``trained=True`` refines the quantizer with ``kmeans_centroids``
     before assignment (the production layout — better-balanced
@@ -612,21 +612,21 @@ def ivf_topk_from_index(
 ) -> DataFrame:
     """Probe a persisted ``write_ivf_index`` layout. The probed
     cluster ids (≤ num_centroids ints — the one legitimately tiny
-    driver-side list) become a LITERAL ``isin`` partition filter, so
-    Catalyst prunes non-probed ``cluster=N`` directories at file-listing
-    time — the executed scan's ``numPartitions`` metric equals the
-    probed-cluster count, not num_centroids (asserted in
-    tests/test_sources.py)."""
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
+    driver-side list) name the only ``cluster=N`` directories that are
+    listed and scanned (``read_partitions``) — the executed scan's
+    ``numPartitions`` metric equals the probed-cluster count, not
+    num_centroids (asserted in tests/test_sources.py)."""
+    from lakehouse_to_rag_spark.sources.lakehouse import (
+        read_layer,
+        read_partitions,
+    )
 
     cent = F.broadcast(read_layer(spark, f"{path}/_centroids"))
     probes = _query_probes(queries, cent, nprobe, id_col, vec_col)
     probe_clusters = sorted(
         r["cluster"] for r in probes.select("cluster").distinct().collect()
     )
-    assigned = read_layer(spark, path).filter(
-        F.col("cluster").isin(probe_clusters)
-    )
+    assigned = read_partitions(spark, path, "cluster", probe_clusters)
     return _score_probed(
         assigned, probes, k, id_col, vec_col, dedupe_candidates=True
     )

@@ -88,6 +88,59 @@ def read_layer(spark: SparkSession, path: str, fmt: str | None = None) -> DataFr
     return df
 
 
+def read_partitions(
+    spark: SparkSession,
+    path: str,
+    col: str,
+    values,
+    schema=None,
+    fmt: str | None = None,
+) -> DataFrame:
+    """Read the rows of a ``partitionBy(col)`` layout whose ``col`` is
+    in ``values``, LISTING only their ``{col}=<v>`` directories.
+
+    ``read_layer(path).filter(col.isin(values))`` prunes only after
+    Spark's file index has listed every partition directory under
+    ``path`` — above ``spark.sql.sources.parallelPartitionDiscovery.
+    threshold`` (32) dirs as a distributed listing job with one task
+    per dir (a 64-task job, ~0.43 s, on every served BM25 query).
+    Here the existing dirs of the wanted values are passed as the load
+    paths, with ``basePath`` keeping ``col`` a partition column, so
+    the listing is bounded by ``len(values)``. Values without a
+    directory (a query term hashing to an empty bucket, a centroid
+    with no vectors) are skipped; when none has one, the result is an
+    empty frame with the layout's schema. Swap remnants inside the
+    root (``{col}=<v>._old_*``, ``._compact_*``) are never read.
+    Values are formatted with ``str()``, the directory names
+    ``partitionBy`` writes for integer keys.
+
+    ``schema`` (optional) skips footer-sampling schema inference; it
+    must name ``col`` as well. Delta layouts read through
+    ``read_layer`` and filter: the Delta log prunes partitions
+    without listing directories."""
+    import os
+
+    fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
+    if fmt == "delta":
+        return read_layer(spark, path, fmt).filter(F.col(col).isin(list(values)))
+    wanted = [os.path.join(path, f"{col}={v}") for v in sorted(set(values))]
+    dirs = [d for d in wanted if os.path.isdir(d)]
+    reader = spark.read.format(fmt).option("basePath", path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    if dirs:
+        return reader.load(dirs)
+    # no probed value has a directory: take the schema from any one
+    # partition dir (not the root, which would list them all)
+    present = sorted(
+        n for n in os.listdir(path)
+        if n.startswith(f"{col}=") and "._" not in n
+    )
+    return reader.load(
+        os.path.join(path, present[0]) if present else path
+    ).where(F.lit(False))
+
+
 # Reserved partition-column name for the key-bucketed upsert layout.
 _KB_COL = "_kb"
 
@@ -253,25 +306,15 @@ def _upsert_bucketed(
     ):
         base = rem.split("._old_")[0].split("._compact_")[0]
         _recover_dir_swap(base)
-    kb_dirs = _kb_partition_dirs(path)  # recovery may have restored one
     touched = sorted(
         r[_KB_COL] for r in up.select(_KB_COL).distinct().collect()
     )
     if not touched:  # empty batch: nothing to rewrite
         return fmt
-    existing = (
-        spark.read.format(fmt)
-        .option("basePath", path)
-        .load([os.path.join(path, f"{_KB_COL}={b}") for b in touched
-               if f"{_KB_COL}={b}" in kb_dirs])
-        if any(f"{_KB_COL}={b}" in kb_dirs for b in touched)
-        else None
-    )
+    existing = read_partitions(spark, path, _KB_COL, touched, fmt=fmt)
     keys = updates.select(*key_cols).distinct()
-    merged = up
-    if existing is not None:
-        kept = existing.join(keys, key_cols, "left_anti")
-        merged = kept.unionByName(up.select(*kept.columns))
+    kept = existing.join(keys, key_cols, "left_anti")
+    merged = kept.unionByName(up.select(*kept.columns))
     tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
     merged.write.format(fmt).partitionBy(_KB_COL).save(tmp)
     for b in touched:

@@ -104,21 +104,45 @@ def maybe_parallelize(
 
 
 def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """``createDataFrame`` for DRIVER-BOUNDED tiny row lists (ledger
-    markers, one-row stats, bounded collected results) without the
-    default fan-out (r13 optimization round): a bare
-    ``createDataFrame(rows)`` parallelizes into defaultParallelism
-    pickled slices, so any downstream single-task consumer — a
-    ``coalesce(1)`` write being the worst case — iterates every slice
-    through its own Python-worker round-trip (measured: a ONE-ROW
-    ``coalesce(1)`` parquet write cost 4.5 s at 32 slices vs 0.26 s at
-    one slice; even the plain 32-slice write/count pays ~0.5 s of
-    parallel worker spin-up for zero parallelism benefit). One slice
-    is the right layout for data that is tiny BY CONTRACT; anything
-    unbounded keeps the default path."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
+    """DataFrame over a DRIVER-BOUNDED tiny row list (ledger markers,
+    one-row stats, query frames, bounded collected results) held in
+    the JVM as a ``LocalRelation``: its plan is a ``LocalTableScan``,
+    so evaluating it starts no Python worker (and a one-row frame
+    collects with no Spark job at all).
+
+    ``createDataFrame(parallelize(rows))`` — the path this replaces —
+    scans a Python RDD, and every plan containing it paid a Python-
+    worker round trip per evaluation (0.25-0.32 s per collect of a
+    served query, ``local[2]``, 4-core VM). Here the rows go to the
+    JVM once, as one Arrow batch.
+
+    Values are bit-identical to that path: each row goes through the
+    schema's own ``toInternal`` (the conversion ``createDataFrame``
+    applies), and the internal values are typed by the schema's Arrow
+    form. Timestamps therefore keep ``toInternal``'s reading of naive
+    datetimes as process-local time; they cross as UTC epoch micros,
+    never as wall-clock values Arrow would read as UTC. Rows may be
+    tuples or ``Row``s, matched to ``schema`` by position.
+
+    The frame is one partition (a multi-row ``LocalTableScan`` would
+    split rows across ``defaultParallelism`` slices; the coalesce is
+    a narrow no-shuffle step)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    internal = [struct.toInternal(r) for r in rows]
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in internal], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
     )
+    df = spark.createDataFrame(table, struct)
+    return df.coalesce(1) if len(internal) > 1 else df
 
 
 def load_tables(

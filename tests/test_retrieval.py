@@ -193,15 +193,33 @@ class TestPersistedBm25Index:
         """write_bm25_index + bm25_topk_from_index must reproduce
         bm25_topk EXACTLY (ranks and 4dp scores) — the scoring tail is
         shared code, so any gap would mean the persisted layout lost
-        information."""
+        information. Also when a query term hashes to a bucket with no
+        directory (alone: an empty answer), and with swap remnants of
+        every bucket inside the layout root, which are never read."""
+        import os
+        import shutil
+
         from lakehouse_to_rag_spark.sources.tables import load_table
 
         d = load_table(spark, sf_dir, "documents")
+        path = str(tmp_path / "bm25_index")
+        n_buckets = 32
+        write_bm25_index(d, path, n_buckets=n_buckets)
+        # a word no document has, hashing to a bucket with no dir
+        words = [f"zq{i}" for i in range(200)]
+        buckets = spark.createDataFrame([(w,) for w in words], "w string").select(
+            "w", F.pmod(F.xxhash64("w"), F.lit(n_buckets)).alias("b")
+        ).collect()
+        absent = next(
+            r["w"] for r in buckets
+            if not os.path.exists(f"{path}/bucket={r['b']}")
+        )
         queries = d.filter(F.col("doc_id") < 3).select(
             F.col("doc_id").alias("query_id"), F.col("text").alias("query")
-        )
-        path = str(tmp_path / "bm25_index")
-        write_bm25_index(d, path, n_buckets=32)
+        ).unionByName(_queries(spark, [(9, absent)]))
+        for b in [n for n in os.listdir(path) if n.startswith("bucket=")]:
+            shutil.copytree(f"{path}/{b}", f"{path}/{b}._old_deadbeef")
+            shutil.copytree(f"{path}/{b}", f"{path}/{b}._compact_cafe")
         got = sorted(
             map(
                 tuple,
@@ -210,6 +228,8 @@ class TestPersistedBm25Index:
         )
         want = sorted(map(tuple, bm25_topk(d, queries, k=5).collect()))
         assert got == want and len(got) == 15
+        only_absent = _queries(spark, [(9, absent)])
+        assert bm25_topk_from_index(spark, path, only_absent, k=5).collect() == []
 
     def test_bucket_pruning_on_query_terms(self, spark, sf_dir, tmp_path):
         """A short query touches few word-hash buckets: the executed
@@ -240,6 +260,58 @@ class TestPersistedBm25Index:
         assert parts, "no partitioned scan found in executed plan"
         # <= 3 distinct words -> <= 3 buckets listed
         assert max(parts) <= 3 < len(bucket_dirs)
+
+    def test_served_query_job_counters(self, spark, tmp_path):
+        """Host-independent guard on the served read path: one
+        ``bm25_topk_from_index`` + collect, in its own job group, over
+        a 64-bucket layout. No job may fan out to one task per bucket
+        dir (a filter on a root read lists every dir first, as a
+        distributed 64-task listing job), and the job count is pinned:
+        9 at ``local[4]``. Both repeat exactly across runs."""
+        import pathlib
+
+        from lakehouse_to_rag_spark.sources.tables import tiny_df
+
+        n_buckets = 64
+        path = str(tmp_path / "bm25_index")
+        # 1001 distinct words: every bucket gets a dir, past the
+        # 32-path threshold of Spark's distributed listing
+        docs = spark.range(1000).selectExpr(
+            "id AS doc_id", "concat('w', id, ' w', id % 17, ' common') AS text"
+        )
+        write_bm25_index(docs, path, n_buckets=n_buckets)
+        assert sum(
+            p.name.startswith("bucket=") for p in pathlib.Path(path).iterdir()
+        ) == n_buckets
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def served_jobs(group):
+            q = tiny_df(spark, [(0, "w1 w2 common")],
+                        "query_id long, query string")
+            sc.setJobGroup(group, group)
+            try:
+                rows = bm25_topk_from_index(spark, path, q, k=5).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert rows
+            # the tracker is fed asynchronously by the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            # tasks a job ran: a stage it reuses from an earlier job
+            # is listed but skipped (no completed tasks, or no info)
+            stages = [
+                [tracker.getStageInfo(s) for s in tracker.getJobInfo(j).stageIds]
+                for j in tracker.getJobIdsForGroup(group)
+            ]
+            return [sum(s.numCompletedTasks for s in ss if s) for ss in stages]
+
+        # job ids follow AQE's stage submission order, which varies;
+        # the multiset of per-job task counts does not
+        first = sorted(served_jobs("bm25-served-guard-1"))
+        second = sorted(served_jobs("bm25-served-guard-2"))
+        assert max(first) < n_buckets, first
+        assert len(first) <= 9, first
+        assert first == second
 
 
 class TestMMRRerank:

@@ -459,6 +459,40 @@ def _scan_metrics(df, metric_names):
     return out
 
 
+def test_read_partitions_lists_only_wanted_dirs(spark, sf_dir, tmp_path):
+    """read_partitions reads exactly the wanted ``col=v`` dirs: every
+    file of a dir that took appends, nothing for a value without a
+    dir, an empty frame with the layout's schema when no value has
+    one, and never a swap remnant inside the root (here full copies of
+    the wanted dir, which would double its rows if read)."""
+    import os
+    import shutil
+
+    from lakehouse_to_rag_spark.sources.lakehouse import read_partitions
+    from lakehouse_to_rag_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    path = str(tmp_path / "layer")
+    for half, mode in (("doc_id < 250", "overwrite"), ("doc_id >= 250", "append")):
+        write_layer(docs.filter(half), path, mode=mode,
+                    partition_by=["source"], fmt="parquet")
+    layout = read_layer(spark, path, fmt="parquet")
+    s0 = sorted(r[0] for r in layout.select("source").distinct().collect())[0]
+    d0 = f"{path}/source={s0}"
+    assert sum(f.endswith(".parquet") for f in os.listdir(d0)) >= 2
+    shutil.copytree(d0, f"{d0}._old_deadbeef")
+    shutil.copytree(d0, f"{d0}._compact_cafe")
+
+    want = sorted(map(tuple, docs.filter(F.col("source") == s0).collect()))
+    for schema in (None, "doc_id long, source string"):
+        got = read_partitions(spark, path, "source", [s0, "no_such"],
+                              schema=schema, fmt="parquet")
+        assert sorted(map(tuple, got.collect())) == want
+        empty = read_partitions(spark, path, "source", ["no_such"],
+                                schema=schema, fmt="parquet")
+        assert empty.schema == layout.schema and empty.collect() == []
+
+
 def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     """write_ivf_index must lay the corpus out as cluster=N directories
     and ivf_topk_from_index must PRUNE non-probed ones: the executed
@@ -469,6 +503,7 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     from lakehouse_to_rag_spark.operators.similarity import (
         ivf_topk,
         ivf_topk_from_index,
+        knn_bruteforce,
         write_ivf_index,
     )
     from lakehouse_to_rag_spark.sources.tables import load_table
@@ -497,6 +532,12 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     assert touched <= 6 < len(cluster_dirs) or touched < len(cluster_dirs)
 
     # probing every cluster must reproduce the in-memory IVF result
+    # and exact search, with swap remnants of every cluster dir
+    # planted inside the root (never read)
+    import shutil
+
+    for c in cluster_dirs:
+        shutil.copytree(f"{path}/{c}", f"{path}/{c}._old_deadbeef")
     full_idx = {
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
         for r in ivf_topk_from_index(
@@ -507,7 +548,11 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
         for r in ivf_topk(emb, queries, k=5, num_centroids=8, nprobe=8).collect()
     }
-    assert full_idx == full_mem
+    exact = {
+        (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
+        for r in knn_bruteforce(emb, queries, k=5).collect()
+    }
+    assert full_idx == full_mem == exact
 
 
 def test_s3a_configuration_surface(spark):
