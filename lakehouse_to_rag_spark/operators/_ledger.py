@@ -14,24 +14,22 @@ Two crash classes threaten it (r13 self-review):
 - death MID scheme write — previously left a half-written ``_scheme``
   directory that *exists* but cannot be read, bricking every
   subsequent batch with an AnalysisException. Fixed here twice over:
-  ``write_scheme`` stages to a ``_scheme__tmp_*`` sibling and
-  ``os.rename``s into place (atomic on POSIX, so the torn state can
-  no longer be created), and ``read_scheme`` treats an unreadable
+  ``write_scheme`` stages to a ``_scheme__tmp_*`` sibling and commits
+  it with ``sources.lakehouse.swap_dir`` (so the torn state can no
+  longer be created), and ``read_scheme`` treats an unreadable
   record as ABSENT, routing the caller into the same migrate
   self-heal as the other crash class instead of raising forever.
 
-Underscore-prefixed names are hidden from Spark/Hadoop file listings,
-so neither ``_scheme`` nor a stale ``_scheme__tmp_*`` remnant ever
-pollutes a data read; remnants are swept opportunistically on the
-next successful write and dropped wholesale by the migrate/compaction
-directory swaps. Single-writer contract throughout (the ledgers'
-documented ingest-loop discipline).
+Underscore- and dot-prefixed names are hidden from Spark/Hadoop file
+listings, so neither ``_scheme`` nor a swap remnant ever pollutes a
+data read; remnants are healed by ``recover_dir`` on the next write.
+Single-writer contract throughout (the ledgers' documented
+ingest-loop discipline).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import SparkSession
@@ -48,22 +46,23 @@ def migrate_ledger(
     ``rebucket`` (a callable DataFrame -> rows carrying a ``bucket``
     column — the caller's distinct + banding/bucketing projection,
     which also heals a crashed bootstrap's partial rows), record the
-    scheme, and swap atomically via the two-rename discipline
-    (``_recover_dir_swap``'s ``__upsert_``/``__old_`` remnant
-    classes). O(cumulative) once; every subsequent batch reads only
-    its colliding buckets."""
-    from lakehouse_to_rag_spark.sources.lakehouse import write_layer
+    scheme, and commit both in one ``swap_dir`` (remnants healed by
+    ``recover_dir``). O(cumulative) once; every subsequent batch
+    reads only its colliding buckets."""
+    from lakehouse_to_rag_spark.sources.lakehouse import (
+        recover_dir,
+        swap_dir,
+        write_layer,
+    )
 
+    recover_dir(path)
     rows = spark.read.parquet(path)
     tmp = f"{path.rstrip('/')}__upsert_{uuid.uuid4().hex[:8]}"
     write_layer(
         rebucket(rows), tmp, partition_by=["bucket"], fmt="parquet"
     )
     write_scheme(spark, tmp, scheme_fields)
-    old = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_dir(tmp, path)
 
 
 def compact_ledger(spark: SparkSession, path: str, split_col: str) -> int:
@@ -103,15 +102,17 @@ def write_scheme(
 ) -> None:
     """Atomically record ``fields`` (int-valued) as the one-row
     ``{table_path}/_scheme`` parquet: stage under ``_scheme__tmp_*``,
-    then rename into place so no reader can ever observe a
-    half-written record."""
-    from lakehouse_to_rag_spark.sources.lakehouse import write_layer
+    then ``swap_dir`` it into place (replacing any existing record) so
+    no reader can ever observe a half-written one."""
+    from lakehouse_to_rag_spark.sources.lakehouse import (
+        recover_dir,
+        swap_dir,
+        write_layer,
+    )
 
-    # sweep stale staging remnants from earlier crashed writes
-    for name in os.listdir(table_path):
-        if name.startswith("_scheme__tmp_"):
-            shutil.rmtree(os.path.join(table_path, name), ignore_errors=True)
-    tmp = os.path.join(table_path, f"_scheme__tmp_{uuid.uuid4().hex[:8]}")
+    final = os.path.join(table_path, "_scheme")
+    recover_dir(final)
+    tmp = f"{final}__tmp_{uuid.uuid4().hex[:8]}"
     schema = ", ".join(f"{k} int" for k in fields)
     from lakehouse_to_rag_spark.sources.tables import tiny_df
 
@@ -120,13 +121,7 @@ def write_scheme(
         tmp,
         fmt="parquet",
     )
-    final = os.path.join(table_path, "_scheme")
-    if os.path.exists(final):
-        # a corrupt remnant from the pre-atomic era (or a healed
-        # migration re-recording): replace under the single-writer
-        # contract — rename onto a non-empty dir would ENOTEMPTY
-        shutil.rmtree(final)
-    os.rename(tmp, final)
+    swap_dir(tmp, final)
 
 
 def read_scheme(

@@ -457,13 +457,13 @@ def admit_batch(
     import uuid
 
     from lakehouse_to_rag_spark.sources.lakehouse import (
-        _recover_dir_swap,
         read_layer,
         read_partitions,
+        recover_dir,
         write_layer,
     )
 
-    _recover_dir_swap(fp_table_path)
+    recover_dir(fp_table_path)
     exists = os.path.exists(fp_table_path)
     if exists:
         stored = _read_fp_scheme(spark, fp_table_path)
@@ -1082,11 +1082,10 @@ def write_training_shards(
     BACK from the written files (counts + hashes, the
     rag_index_manifest convention: the manifest proves the write, not
     the plan). Crash-safe: everything — data AND its ``_manifest`` —
-    builds in a staging dir and lands via the module's two-rename
-    swap, so a visible layer always carries the manifest that
-    describes it; remnants of a crashed swap are healed by
-    ``_recover_dir_swap`` on the next call (the upsert/compact
-    recovery contract). Returns the manifest:
+    builds in a staging dir and lands in one ``swap_dir``, so a
+    visible layer always carries the manifest that describes it;
+    remnants of a crashed swap are healed by ``recover_dir`` on the
+    next call. Returns the manifest:
     (shard, n_docs, n_tokens, id_hash).
 
     Shard ids may be SPARSE: a document is assigned by its first
@@ -1095,26 +1094,24 @@ def write_training_shards(
     document starts in, and those ids have no ``shard=N/`` directory.
     The ``_manifest`` is the shard list; never enumerate
     ``range(max_shard + 1)``."""
-    import os
-    import shutil
     import uuid
 
     from lakehouse_to_rag_spark.sources.lakehouse import (
-        _recover_dir_swap,
         read_layer,
+        recover_dir,
+        swap_dir,
         write_layer,
     )
 
     spark = docs.sparkSession
-    _recover_dir_swap(path)
+    recover_dir(path)
     assigned = training_shards_assign(
         docs, token_budget, id_col, text_col, seed
     )
     data = docs.join(assigned, id_col).select(
         F.col(id_col), "shard", "shuffle_key", "n_tokens", F.col(text_col)
     )
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"  # _recover_dir_swap's
-    # tmp-prefix class: a crash before the swap leaves a discardable dir
+    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
     write_layer(
         data.repartition("shard").sortWithinPartitions(
             "shard", "shuffle_key"
@@ -1139,13 +1136,7 @@ def write_training_shards(
         .withColumn("id_col", F.lit(id_col))
     )
     write_layer(manifest, f"{tmp}/_manifest", fmt="parquet")
-    if os.path.exists(path):
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, path)
+    swap_dir(tmp, path)
     return read_layer(spark, f"{path}/_manifest", fmt="parquet")
 
 

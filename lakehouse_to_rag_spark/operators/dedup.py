@@ -2073,7 +2073,7 @@ def migrate_media_ledger(
     rows — which heals both the pre-r13 flat layout AND a crashed
     bootstrap that wrote band rows but died before its ``_scheme`` —
     rewrite as band rows under ``bucket=N/`` with the scheme record,
-    and swap atomically (``_recover_dir_swap``'s remnant classes).
+    and commit in one ``swap_dir`` (remnants healed by ``recover_dir``).
     O(cumulative) once; every subsequent batch reads only its
     colliding buckets — the shared ``_ledger.migrate_ledger``
     discipline."""
@@ -2167,9 +2167,9 @@ def admit_media_batch(
     import uuid
 
     from lakehouse_to_rag_spark.sources.lakehouse import (
-        _recover_dir_swap,
         read_layer,
         read_partitions,
+        recover_dir,
         write_layer,
     )
 
@@ -2182,7 +2182,7 @@ def admit_media_batch(
             f"unknown media kind {media!r}: image | audio"
         )
     num_bands = _resolve_bands(num_bands, max_hamming, "admit_media_batch")
-    _recover_dir_swap(sig_table_path)
+    recover_dir(sig_table_path)
     exists = os.path.exists(sig_table_path)
     if exists:
         scheme = _read_media_scheme(spark, sig_table_path)

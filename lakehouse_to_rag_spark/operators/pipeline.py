@@ -106,18 +106,24 @@ def run_medallion_incremental(
     nothing); its bronze upsert still lands LAST as the commit
     marker, so the crash contract is unchanged. The admission count
     rides the one materialization the batch already paid (the lazy
-    checkpoint's first action IS the count job).
+    checkpoint's first action IS the count job). Each batch first
+    heals the three layers' swap remnants (``recover_dir``): a crash
+    in bronze's between-renames window would otherwise make the
+    admission read find no bronze and re-admit every re-crawled url.
     """
     from pyspark.errors import AnalysisException
 
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
+        recover_dir,
         upsert_by_key,
     )
 
     ts = DETERMINISTIC_TS if deterministic else None
     paths = {k: f"{state_dir}/{k}" for k in ("bronze", "silver", "gold")}
     for raw_b in raw_batches:
+        for p in paths.values():
+            recover_dir(p)
         bronze_b = bronze_transform(
             raw_b,
             id_cols=("url", "source", "title", "doc_id", "lang"),

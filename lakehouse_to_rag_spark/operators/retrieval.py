@@ -333,9 +333,9 @@ def append_to_bm25_index(
 
     Commit discipline: the postings append lands first, then the
     updated one-row ``_stats`` is written to a sibling tmp dir and
-    swapped in (two renames) — ``_stats`` is therefore never torn by
-    a mid-overwrite crash, and stale ``._compact_``/``._old_``
-    remnants are repaired on the next append. The remaining
+    committed with ``swap_dir`` — ``_stats`` is therefore never torn
+    by a mid-overwrite crash, and ``recover_dir`` heals any swap
+    remnant on the next append. The remaining
     HALF-COMMIT window, stated: a crash after the postings append but
     before the swap leaves ``_stats`` excluding the already-appended
     docs (served avgdl/N silently stale) — on any append failure run
@@ -344,16 +344,15 @@ def append_to_bm25_index(
     Returns the number of posting rows appended."""
     import os
 
-    from lakehouse_to_rag_spark.operators.similarity import (
-        _recover_compact_remnants,
-    )
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
+        recover_dir,
+        swap_dir,
         write_layer,
     )
 
-    _recover_compact_remnants(os.path.join(path, "_stats"))
-    _recover_compact_remnants(os.path.join(path, "_ids"))
+    recover_dir(os.path.join(path, "_stats"))
+    recover_dir(os.path.join(path, "_ids"))
     stats = _read_stats_row(spark, os.path.join(path, "_stats"))
     if "sum_dl" not in stats:
         raise ValueError(
@@ -495,22 +494,17 @@ def append_to_bm25_index(
         [(n_docs, sum_dl, sum_dl / n_docs, n_buckets)],
         "n_docs long, sum_dl long, avgdl double, n_buckets long",
     )
-    # tmp-write + two-rename swap: _stats is replaced whole, never
+    # tmp-write + swap_dir: _stats is replaced whole, never
     # overwritten in place, so a crash can leave it STALE (see the
-    # half-commit caveat above) but never TORN. Same remnant naming as
-    # _compact_index_layout so one recovery routine repairs both.
+    # half-commit caveat above) but never TORN.
     # (tiny_df is already one slice — a coalesce(1) here used to cost
     # 4.5 s serially re-evaluating 32 pickled slices, see tables.py)
-    import shutil
     import uuid
 
     sdir = os.path.join(path, "_stats")
     tmp = f"{sdir}._compact_{uuid.uuid4().hex[:8]}"
     write_layer(new_stats, tmp)
-    old = f"{sdir}._old_{uuid.uuid4().hex[:8]}"
-    os.rename(sdir, old)
-    os.rename(tmp, sdir)
-    shutil.rmtree(old)
+    swap_dir(tmp, sdir)
     return n
 
 
@@ -528,24 +522,22 @@ def rebuild_bm25_stats(spark, path: str) -> None:
     distinct indexed ids (r14: the membership sidecar the append's
     fail-closed check probes instead of a full-index scan), restoring
     the ids-superset invariant after the ids-append crash window left
-    orphan ids. One pruned scan feeds both via a lazy checkpoint; the
-    swap discipline matches the append path."""
+    orphan ids. One pruned scan feeds both via a lazy checkpoint; each
+    commits through ``swap_dir``, as on the append path."""
     import os
-    import shutil
     import uuid
 
-    from lakehouse_to_rag_spark.operators.similarity import (
-        _recover_compact_remnants,
-    )
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
+        recover_dir,
+        swap_dir,
         write_layer,
     )
 
     sdir = os.path.join(path, "_stats")
-    _recover_compact_remnants(sdir)
+    recover_dir(sdir)
     idir = os.path.join(path, "_ids")
-    _recover_compact_remnants(idir)
+    recover_dir(idir)
     n_buckets = int(read_layer(spark, sdir).collect()[0]["n_buckets"])
     id_dl = (
         read_layer(spark, path)
@@ -561,19 +553,10 @@ def rebuild_bm25_stats(spark, path: str) -> None:
     )
     tmp = f"{sdir}._compact_{uuid.uuid4().hex[:8]}"
     write_layer(stats_df.coalesce(1), tmp)
-    old = f"{sdir}._old_{uuid.uuid4().hex[:8]}"
-    os.rename(sdir, old)
-    os.rename(tmp, sdir)
-    shutil.rmtree(old)
+    swap_dir(tmp, sdir)
     itmp = f"{idir}._compact_{uuid.uuid4().hex[:8]}"
     write_layer(id_dl.select("id"), itmp)
-    if os.path.exists(idir):
-        iold = f"{idir}._old_{uuid.uuid4().hex[:8]}"
-        os.rename(idir, iold)
-        os.rename(itmp, idir)
-        shutil.rmtree(iold)
-    else:
-        os.rename(itmp, idir)
+    swap_dir(itmp, idir)
 
 
 def compact_bm25_index(

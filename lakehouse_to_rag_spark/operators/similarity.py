@@ -436,47 +436,6 @@ def append_to_ivf_index(
     return int(obs.get["n"])
 
 
-def _recover_compact_remnants(path: str) -> None:
-    """Crash recovery for ``_compact_index_layout``'s two-rename swap —
-    run before every compaction pass (and safe to call at sink
-    startup). Three remnant states, each unambiguous:
-
-    - ``<path>._compact_*`` exists: a compaction died before its first
-      rename. The source layout is intact (at ``path`` or ``._old_``),
-      so the partial rewrite is discarded.
-    - ``path`` missing but ``<path>._old_*`` present: death BETWEEN the
-      two renames — the only window where no layout is at ``path``.
-      The old dir is byte-complete; rename it back.
-    - ``path`` AND ``<path>._old_*`` both present: death after the
-      second rename but before cleanup; the new layout already serves,
-      so the old dir is deleted.
-    """
-    import glob
-    import os
-    import shutil
-
-    base = path.rstrip("/")
-    # glob.escape: an index path containing glob metacharacters
-    # ([, ?, *) would otherwise match NOTHING and remnants would
-    # silently go unrepaired (only the appended remnant suffix is a
-    # wildcard, never the base path itself).
-    pat = glob.escape(base)
-    for t in glob.glob(f"{pat}._compact_*"):
-        shutil.rmtree(t, ignore_errors=True)
-    olds = sorted(glob.glob(f"{pat}._old_*"))
-    if olds:
-        if not os.path.exists(base):
-            # >1 ._old_ remnant with `path` missing is UNREACHABLE
-            # under the single-writer contract (each swap deletes its
-            # old dir before the next can start; the between-renames
-            # crash window holds at most one). The sorted()[0] pick
-            # is therefore never a choice between live candidates.
-            os.rename(olds[0], base)
-            olds = olds[1:]
-        for o in olds:
-            shutil.rmtree(o, ignore_errors=True)
-
-
 def _compact_index_layout(
     spark,
     path: str,
@@ -517,9 +476,9 @@ def _compact_index_layout(
     discarded; there is no lock because the single-writer maintenance
     window is the operational model (the same contract Delta OPTIMIZE
     assumes of concurrent blind appends it can't see). Crash safety is
-    handled separately: ``_recover_compact_remnants`` runs first and
-    repairs any ``._old_``/``._compact_`` remnant a previous
-    interrupted pass left behind (remnant-recovery tested)."""
+    the ``sources.lakehouse`` primitive's: ``recover_dir`` runs first
+    and heals any remnant a previous interrupted pass left behind,
+    and the rewrite commits through ``swap_dir``."""
     import os
     import pathlib
     import shutil
@@ -527,10 +486,12 @@ def _compact_index_layout(
 
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
+        recover_dir,
+        swap_dir,
         write_layer,
     )
 
-    _recover_compact_remnants(path)
+    recover_dir(path)
     df = read_layer(spark, path)
     tmp = f"{path.rstrip('/')}._compact_{uuid.uuid4().hex[:8]}"
     if target_rows_per_file is None:
@@ -562,10 +523,7 @@ def _compact_index_layout(
             write_layer(
                 read_layer(spark, src).coalesce(1), os.path.join(tmp, aux)
             )
-    old = f"{path.rstrip('/')}._old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_dir(tmp, path)
     aux_all = set(carry_dirs) | set(rewrite_dirs)
     return len(
         [

@@ -14,39 +14,78 @@ given (e.g. source / date) so downstream reads prune partitions;
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _recover_dir_swap(path: str) -> None:
-    """Crash recovery for this module's two-rename directory swaps
-    (``upsert_by_key``'s ``__upsert_``/``__old_`` and
-    ``compact_layer``'s ``._compact_``/``._old_`` remnants) — the
-    ``_recover_compact_remnants`` contract (operators/similarity.py):
-    pre-first-rename partials are discarded (the source layer is
-    intact), a missing ``path`` with an old-dir present is the
-    between-renames window (the old dir is byte-complete — rename it
-    back; without this, a crash there LOSES the layer: ``upsert_by_key``
-    would treat the next upsert as a fresh write of only the update
-    rows), and both present means death before cleanup (the new layer
-    already serves; delete the old). Runs at the start of every swap
-    operation; safe and O(1) when there is nothing to repair."""
-    import glob
-    import os
-    import shutil
+# Remnant names a crash leaves beside a target: the suffixes callers
+# stage rewrites under, and the displaced old dir (``swap_dir`` writes
+# ``.{name}._old_``; the other two are earlier versions' names).
+_STAGED = ("__upsert_", "._compact_", "__v_", "__tmp_")
+_DISPLACED = ("{}__old_", "{}._old_", ".{}._old_")
 
-    base = path.rstrip("/")
-    pat = glob.escape(base)
-    for t in glob.glob(f"{pat}__upsert_*") + glob.glob(f"{pat}._compact_*"):
-        shutil.rmtree(t, ignore_errors=True)
-    olds = sorted(glob.glob(f"{pat}__old_*") + glob.glob(f"{pat}._old_*"))
-    if olds:
-        if not os.path.exists(base):
-            # single-writer: at most one old dir can exist here
-            os.rename(olds[0], base)
-        else:
-            for o in olds:
-                shutil.rmtree(o, ignore_errors=True)
+
+def swap_dir(staged: str, target: str) -> None:
+    """Commit the fully written dir ``staged`` as ``target`` — the one
+    directory swap behind every parquet-fallback rewrite (the Delta
+    overwrite's atomic commit, done by hand). An existing ``target``
+    is first renamed to the dot-prefixed sibling
+    ``.{name}._old_<uuid>``, then ``staged`` takes its name and the
+    old dir is deleted; an absent ``target`` is one rename. Spark's
+    file index skips dot-prefixed names, so the displaced dir is never
+    read, even when it sits inside a layer root (a ``_kb=N`` bucket).
+
+    A crash at any step leaves a state ``recover_dir(target)`` heals:
+    before the first rename the target is intact; between the renames
+    only the old dir holds it; after the second the new one serves.
+    Staged paths must be siblings on the same filesystem, named with
+    one of ``_STAGED``'s suffixes so recovery can discard them."""
+    head, name = os.path.split(target.rstrip("/"))
+    if os.path.exists(target):
+        old = os.path.join(head, f".{name}._old_{uuid.uuid4().hex[:8]}")
+        os.rename(target, old)
+        os.rename(staged, target)
+        shutil.rmtree(old)
+    else:
+        os.rename(staged, target)
+
+
+def recover_dir(target: str) -> None:
+    """Heal the remnants of crashed ``swap_dir`` commits of ``target``:
+    staged dirs are discarded (the swap never started, the source is
+    intact); a missing ``target`` with a displaced old dir is the
+    between-renames window, so the old dir (byte-complete) is renamed
+    back; with ``target`` present, old dirs are deleted (death before
+    cleanup). Writers call it before reading what they rewrite;
+    readers never do, because a rename-back during a live writer's
+    between-renames window would make its second rename fail.
+
+    Only names derived from ``target``'s own name are touched, never
+    the rest of its parent, so a concurrent swap of a sibling layer is
+    left alone. One ``listdir`` and nothing else when there is
+    nothing to repair; no glob, so paths holding ``[?*`` are safe."""
+    head, name = os.path.split(target.rstrip("/"))
+    try:
+        names = sorted(os.listdir(head or "."))
+    except FileNotFoundError:
+        return
+    staged = tuple(name + s for s in _STAGED)
+    displaced = tuple(p.format(name) for p in _DISPLACED)
+    olds = []
+    for n in names:
+        if n.startswith(staged):
+            shutil.rmtree(os.path.join(head, n), ignore_errors=True)
+        elif n.startswith(displaced):
+            olds.append(os.path.join(head, n))
+    if olds and not os.path.exists(target):
+        # single writer: the between-renames window holds one old dir
+        os.rename(olds.pop(0), target)
+    for o in olds:
+        shutil.rmtree(o, ignore_errors=True)
 
 
 def _delta_available(spark: SparkSession) -> bool:
@@ -118,8 +157,6 @@ def read_partitions(
     must name ``col`` as well. Delta layouts read through
     ``read_layer`` and filter: the Delta log prunes partitions
     without listing directories."""
-    import os
-
     fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
     if fmt == "delta":
         return read_layer(spark, path, fmt).filter(F.col(col).isin(list(values)))
@@ -148,8 +185,6 @@ _KB_COL = "_kb"
 def _kb_partition_dirs(path: str) -> list[str]:
     """The `_kb=<n>` partition dirs of a bucketed layer ([] for flat
     layouts / missing paths)."""
-    import os
-
     try:
         return sorted(
             n for n in os.listdir(path)
@@ -195,25 +230,25 @@ def upsert_by_key(
     ``_kb=<xxhash64(key) % n_kb>`` partition dirs (``read_layer``
     hides the column), and an upsert rewrites ONLY the buckets the
     batch's keys hash to — O(batch/n_kb · layer) instead of O(layer),
-    the parquet-era analogue of MERGE's file-level rewrite. Each
-    touched bucket swaps with the same two-rename discipline as the
-    flat path (recovered per-bucket by ``_recover_dir_swap``), so a
-    crash mid-upsert leaves SOME buckets upserted and the rest
-    untouched — a coarser window than the flat layout's all-or-
-    nothing swap, converged by the single-writer replay contract
-    (re-running the same upsert is idempotent per key; the medallion
-    caller additionally orders its commit-marker layer last).
-    A flat layer is migrated to the bucketed layout on its first
-    ``n_kb`` upsert (one full rewrite, after which rewrites prune);
-    passing ``n_kb=None`` on a bucketed layer keeps the layout but
-    rewrites every bucket. Delta MERGE ignores ``n_kb`` (the log
-    already prunes at file level).
+    the parquet-era analogue of MERGE's file-level rewrite. The
+    layer's ``n_kb`` is recorded in its one-row ``_scheme`` (written
+    into the staged dir, so data and record land in one swap) and
+    every bucketed upsert reads it: ``n_kb=None`` on a bucketed layer
+    uses the recorded value and still rewrites only the touched
+    buckets; a different ``n_kb``, or ``_kb=`` dirs without a record,
+    raise ``ValueError`` (a wrong modulus would put a key's new row in
+    another bucket than its old one). Each touched bucket commits
+    through its own ``swap_dir``, so a crash mid-upsert leaves SOME
+    buckets upserted and the rest untouched — a coarser window than
+    the flat layout's all-or-nothing swap, converged by the
+    single-writer replay contract (re-running the same upsert is
+    idempotent per key; the medallion caller additionally orders its
+    commit-marker layer last). A flat layer is migrated to the
+    bucketed layout on its first ``n_kb`` upsert (one full rewrite,
+    after which rewrites prune). Delta MERGE ignores ``n_kb`` (the
+    log already prunes at file level).
     """
-    import os
-    import shutil
-    import uuid
-
-    _recover_dir_swap(path)
+    recover_dir(path)
     fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
     if fmt == "delta":
         from delta.tables import DeltaTable  # type: ignore
@@ -229,25 +264,20 @@ def upsert_by_key(
         )
         return fmt
 
-    kb_dirs = _kb_partition_dirs(path)
-    if n_kb is not None or kb_dirs:
-        return _upsert_bucketed(
-            spark, path, updates, key_cols, fmt,
-            n_kb=n_kb or len(kb_dirs) or 16, kb_dirs=kb_dirs,
-        )
-    if not os.path.exists(path):
-        updates.write.format(fmt).save(path)
-        return fmt
-    existing = spark.read.format(fmt).load(path)
-    keys = updates.select(*key_cols).distinct()
-    kept = existing.join(keys, key_cols, "left_anti")
-    merged = kept.unionByName(updates)
+    if (
+        n_kb is not None
+        or _kb_partition_dirs(path)
+        or os.path.exists(os.path.join(path, "_scheme"))
+    ):
+        return _upsert_bucketed(spark, path, updates, key_cols, fmt, n_kb)
+    merged = updates
+    if os.path.exists(path):
+        existing = spark.read.format(fmt).load(path)
+        keys = updates.select(*key_cols).distinct()
+        merged = existing.join(keys, key_cols, "left_anti").unionByName(updates)
     tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
     merged.write.format(fmt).save(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_dir(tmp, path)
     return fmt
 
 
@@ -257,83 +287,66 @@ def _upsert_bucketed(
     updates: DataFrame,
     key_cols: list[str],
     fmt: str,
-    n_kb: int,
-    kb_dirs: list[str],
+    n_kb: int | None,
 ) -> str:
     """Parquet-fallback upsert into the key-bucketed layout (see
-    ``upsert_by_key``). The batch's touched buckets are computed from
-    its keys (bounded by n_kb), only those ``_kb=N`` dirs are read
-    (partition-pruned scan), merged, rewritten to a sibling tmp, and
-    swapped per bucket. Untouched buckets' files are not opened, read
-    or rewritten — the file-count/pruning evidence is pinned by
-    tests/test_sources.py."""
-    import os
-    import shutil
-    import uuid
+    ``upsert_by_key``). ``updates`` is evaluated once (lazy local
+    checkpoint, materialized by the touched-bucket collect), so a
+    non-deterministic plan cannot put a key in the anti-join but not
+    the union. Only the touched ``_kb=N`` dirs are read
+    (partition-pruned scan), merged, rewritten to a sibling staged
+    dir, and swapped per bucket. Untouched buckets' files are not
+    opened, read or rewritten — the file-count/pruning evidence is
+    pinned by tests/test_sources.py."""
+    from lakehouse_to_rag_spark.operators._ledger import (
+        read_scheme,
+        write_scheme,
+    )
 
+    recorded = None
+    if os.path.exists(path):
+        recorded = (read_scheme(spark, path, ("n_kb",)) or {}).get("n_kb")
+        if recorded is None and (n_kb is None or _kb_partition_dirs(path)):
+            raise ValueError(
+                f"upsert_by_key: {path} is bucketed but has no readable "
+                "_scheme n_kb record; refusing to guess the modulus"
+            )
+        if None not in (recorded, n_kb) and recorded != n_kb:
+            raise ValueError(
+                f"upsert_by_key: n_kb={n_kb} but {path} is bucketed "
+                f"with n_kb={recorded}"
+            )
+    n_kb = recorded or n_kb
     kb = _kb_col(key_cols, n_kb)
-    up = updates.withColumn(_KB_COL, kb)
-    if not os.path.exists(path):
-        up.write.format(fmt).partitionBy(_KB_COL).save(path)
-        return fmt
-    if not kb_dirs:
-        # flat layer: one-time migration — full rewrite into the
-        # bucketed layout with the same atomic root swap as the flat
-        # upsert (after this, every upsert prunes)
-        existing = spark.read.format(fmt).load(path)
-        keys = updates.select(*key_cols).distinct()
-        kept = existing.join(keys, key_cols, "left_anti")
-        merged = kept.unionByName(updates).withColumn(_KB_COL, kb)
-        tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
+    up = updates.withColumn(_KB_COL, kb).localCheckpoint(eager=False)
+    keys = up.select(*key_cols).distinct()
+    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
+    if recorded is None:
+        # bootstrap, or the one-time migration of a flat layer: the
+        # whole layer and its n_kb record land in one root swap
+        merged = up
+        if os.path.exists(path):
+            existing = spark.read.format(fmt).load(path)
+            kept = existing.join(keys, key_cols, "left_anti")
+            merged = kept.withColumn(_KB_COL, kb).unionByName(up)
         merged.write.format(fmt).partitionBy(_KB_COL).save(tmp)
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+        write_scheme(spark, tmp, {"n_kb": n_kb})
+        swap_dir(tmp, path)
         return fmt
-    # existing bucket count wins: the bucket function must match the
-    # layout on disk or pruning would read the wrong dirs
-    # recover remnants for EVERY bucket, not just this batch's: a
-    # crash between a previous upsert's two renames leaves that bucket
-    # dir missing with only its ._old_ sibling — readers would silently
-    # lose the bucket until something touched it again
-    import glob as _glob
-
-    for rem in _glob.glob(
-        os.path.join(_glob.escape(path), f"{_KB_COL}=*._old_*")
-    ) + _glob.glob(
-        os.path.join(_glob.escape(path), f"{_KB_COL}=*._compact_*")
-    ):
-        base = rem.split("._old_")[0].split("._compact_")[0]
-        _recover_dir_swap(base)
+    for b in range(n_kb):
+        recover_dir(os.path.join(path, f"{_KB_COL}={b}"))
     touched = sorted(
         r[_KB_COL] for r in up.select(_KB_COL).distinct().collect()
     )
     if not touched:  # empty batch: nothing to rewrite
         return fmt
     existing = read_partitions(spark, path, _KB_COL, touched, fmt=fmt)
-    keys = updates.select(*key_cols).distinct()
     kept = existing.join(keys, key_cols, "left_anti")
     merged = kept.unionByName(up.select(*kept.columns))
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
     merged.write.format(fmt).partitionBy(_KB_COL).save(tmp)
-    for b in touched:
-        src = os.path.join(tmp, f"{_KB_COL}={b}")
-        dst = os.path.join(path, f"{_KB_COL}={b}")
-        if not os.path.exists(src):
-            # a touched bucket can legitimately come out empty only if
-            # every one of its rows was replaced by nothing — not
-            # reachable (updates rows land in their own bucket), but
-            # never leave a stale bucket behind if it ever becomes so
-            continue
-        if os.path.exists(dst):
-            old = f"{dst}._old_{uuid.uuid4().hex[:8]}"
-            os.rename(dst, old)
-            os.rename(src, dst)
-            shutil.rmtree(old)
-        else:
-            os.rename(src, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
+    for d in _kb_partition_dirs(tmp):
+        swap_dir(os.path.join(tmp, d), os.path.join(path, d))
+    shutil.rmtree(tmp)
     return fmt
 
 
@@ -482,12 +495,9 @@ def compact_layer(
     ``operators.similarity.compact_ivf_index`` for those.
     """
     import math
-    import os
     import pathlib
-    import shutil
-    import uuid
 
-    _recover_dir_swap(path)
+    recover_dir(path)
     fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
     df = spark.read.format(fmt).load(path)
     if target_files is None:
@@ -507,10 +517,7 @@ def compact_layer(
         else df.repartition(target_files)
     )
     sized.write.format(fmt).mode("overwrite").save(tmp)
-    old = f"{path.rstrip('/')}._old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_dir(tmp, path)
     n = len(
         [
             f

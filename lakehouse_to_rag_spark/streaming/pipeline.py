@@ -604,54 +604,30 @@ def stream_scd2_sink(
     ledger land in one atomic directory rename. Any crash leaves
     either the old consistent (dim, ledger) pair — replay re-applies
     — or the new one — replay skips; the one between-renames window
-    where neither is at ``dim_path`` is repaired by the remnant
-    recovery pass at the start of every batch (the
-    ``_recover_compact_remnants`` contract — without it a crash
-    there would silently re-bootstrap from one batch). A
+    where neither is at ``dim_path`` is healed by ``recover_dir`` at
+    the start of every batch (the ``swap_dir`` contract — without it
+    a crash there would silently re-bootstrap from one batch). A
     whole-stream rerun from a fresh checkpoint is likewise a no-op. The upstream contract is
     the CDC one ``scd2_apply_changes`` documents: batches arrive in
     event-time order per key. Returns the started StreamingQuery."""
     import json
     import os
-    import shutil
     import uuid
 
     from lakehouse_to_rag_spark.operators.events import (
         scd2_apply_changes,
         scd2_dimension,
     )
-
-    def _recover_swap_remnants() -> None:
-        """Crash recovery for the two-rename swap below — the
-        `_recover_compact_remnants` contract (similarity.py) applied
-        to the dimension directory. Three unambiguous states:
-        ``__v_*`` partials died before their first rename (old dim
-        intact → discard); ``dim_path`` missing with ``__old_*``
-        present is the between-renames window (the old dir is
-        byte-complete → rename back — without this, a restart in that
-        window would silently BOOTSTRAP from one batch and lose all
-        history); both present is death before cleanup (new dim
-        serves → delete old)."""
-        import glob
-
-        base = dim_path.rstrip("/")
-        pat = glob.escape(base)
-        for t in glob.glob(f"{pat}__v_*"):
-            shutil.rmtree(t, ignore_errors=True)
-        olds = sorted(glob.glob(f"{pat}__old_*"))
-        if olds:
-            if not os.path.exists(base):
-                # single-writer: at most one __old_ can exist here
-                os.rename(olds[0], base)
-            else:
-                for o in olds:
-                    shutil.rmtree(o, ignore_errors=True)
+    from lakehouse_to_rag_spark.sources.lakehouse import (
+        recover_dir,
+        swap_dir,
+    )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        _recover_swap_remnants()
+        recover_dir(dim_path)
         applied: set[int] = set()
         lpath = os.path.join(dim_path, "_ledger.json")
         if os.path.exists(lpath):
@@ -674,13 +650,7 @@ def stream_scd2_sink(
         new_dim.write.parquet(tmp)
         with open(os.path.join(tmp, "_ledger.json"), "w") as f:
             json.dump(sorted(applied | {int(batch_id)}), f)
-        if os.path.exists(dim_path):
-            old = f"{dim_path}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(dim_path, old)
-            os.rename(tmp, dim_path)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, dim_path)
+        swap_dir(tmp, dim_path)
 
     writer = (
         events.writeStream.foreachBatch(_apply)
@@ -773,11 +743,9 @@ def stream_chunk_refresh_sink(
         # between-renames window the read would raise, this batch
         # would treat the manifest as absent, and the fresh write
         # would orphan (then lose) every other doc's rows
-        from lakehouse_to_rag_spark.sources.lakehouse import (
-            _recover_dir_swap,
-        )
+        from lakehouse_to_rag_spark.sources.lakehouse import recover_dir
 
-        _recover_dir_swap(manifest_path)
+        recover_dir(manifest_path)
         try:
             manifest = spark.read.parquet(manifest_path)
         except AnalysisException:

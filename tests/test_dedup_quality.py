@@ -1797,16 +1797,14 @@ def test_compact_remnant_recovery_glob_metachar_path(tmp_path):
     (between-renames crash state staged by hand)."""
     import os
 
-    from lakehouse_to_rag_spark.operators.similarity import (
-        _recover_compact_remnants,
-    )
+    from lakehouse_to_rag_spark.sources.lakehouse import recover_dir
 
     base = str(tmp_path / "ivf[v2]")
     os.makedirs(f"{base}._old_cafef00d/cluster=0")
     with open(f"{base}._old_cafef00d/cluster=0/part-0", "w") as f:
         f.write("x")
     os.makedirs(f"{base}._compact_deadbeef")
-    _recover_compact_remnants(base)
+    recover_dir(base)
     assert os.path.exists(f"{base}/cluster=0/part-0")
     assert not os.path.exists(f"{base}._old_cafef00d")
     assert not os.path.exists(f"{base}._compact_deadbeef")
@@ -1822,11 +1820,11 @@ def test_compact_remnant_recovery(spark, sf_dir, tmp_path):
     import shutil
 
     from lakehouse_to_rag_spark.operators.similarity import (
-        _recover_compact_remnants,
         compact_ivf_index,
         ivf_topk_from_index,
         write_ivf_index,
     )
+    from lakehouse_to_rag_spark.sources.lakehouse import recover_dir
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     path = str(tmp_path / "ivf")
@@ -1848,14 +1846,14 @@ def test_compact_remnant_recovery(spark, sf_dir, tmp_path):
     # (b)+(c) staged via a real crash simulation: move the layout to
     # the _old_ name (exactly the state between the two renames)
     shutil.move(path, f"{path}._old_cafef00d")
-    _recover_compact_remnants(path)
+    recover_dir(path)
     assert not os.path.exists(f"{path}._compact_deadbeef")
     assert not os.path.exists(f"{path}._old_cafef00d")
     assert served() == want
 
     # (c) death after the second rename, before cleanup: old copy left
     shutil.copytree(path, f"{path}._old_12345678")
-    _recover_compact_remnants(path)
+    recover_dir(path)
     assert not os.path.exists(f"{path}._old_12345678")
     assert served() == want
 

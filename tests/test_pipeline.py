@@ -227,6 +227,45 @@ def test_medallion_incremental_crash_replay(spark, sf_dir, tmp_path):
         assert a == b and a, layer
 
 
+def test_medallion_incremental_heals_bronze_before_admission(
+    spark, sf_dir, tmp_path
+):
+    """A crash in bronze's between-renames window leaves no bronze at
+    its path, only the displaced old dir. The next batch must heal it
+    BEFORE the admission read: otherwise the read finds no bronze,
+    every re-crawled url is re-admitted and its first-crawl silver and
+    gold rows are replaced."""
+    import os
+
+    from lakehouse_to_rag_spark.operators.pipeline import (
+        documents_as_raw,
+        run_medallion_incremental,
+    )
+
+    raw = documents_as_raw(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    b1 = raw.filter("doc_id < 40")
+    recrawl = (
+        raw.filter("doc_id < 10")
+        .withColumn("doc_id", F.col("doc_id") + F.lit(10_000_000))
+        .withColumn(
+            "content", F.concat(F.lit("RECRAWLED COPY "), F.col("content"))
+        )
+    )
+    state = str(tmp_path / "crashed")
+    run_medallion_incremental(spark, [b1], state)
+    os.rename(f"{state}/bronze", f"{state}/bronze__old_deadbeef")
+    crashed = run_medallion_incremental(spark, [recrawl], state)
+    clean = run_medallion_incremental(
+        spark, [b1, recrawl], str(tmp_path / "clean")
+    )
+    for layer in ("bronze", "silver", "gold"):
+        cols = sorted(clean[layer].columns)
+        a = sorted(map(tuple, crashed[layer].select(*cols).collect()))
+        b = sorted(map(tuple, clean[layer].select(*cols).collect()))
+        assert a == b and a, layer
+    assert not os.path.exists(f"{state}/bronze__old_deadbeef")
+
+
 def test_observed_medallion_metrics_match_direct_aggregates(spark, sf_dir):
     """Observation metrics (computed inside the job, zero extra scan)
     must equal the values a separate aggregation job computes, and one

@@ -4,6 +4,7 @@
 import os
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_to_rag_spark.operators.analytics import run_custom_query
@@ -204,6 +205,67 @@ def test_upsert_key_bucketed_recovers_crashed_bucket_swap(
     got = sorted(map(tuple, read_layer(spark, path).collect()))
     want = [t if t[0] != 0 else (0, "REPLACED", "srcX") for t in want]
     assert got == sorted(want)
+
+
+def test_upsert_bucketed_n_kb_is_recorded_and_fails_closed(spark, tmp_path):
+    """The bucket modulus is the layer's recorded ``_scheme`` n_kb, not
+    the count of ``_kb=`` dirs (wrong whenever a bucket is empty): a
+    16-bucket layer holding 2 keys upserted with ``n_kb=None`` keeps 2
+    rows; an explicit different ``n_kb``, or bucket dirs without a
+    record, raise instead of re-bucketing only the batch's keys."""
+    import shutil
+
+    from lakehouse_to_rag_spark.sources.lakehouse import (
+        read_layer,
+        upsert_by_key,
+    )
+
+    def rows(p):
+        return sorted(map(tuple, read_layer(spark, p).collect()))
+
+    old = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    new = spark.createDataFrame([(1, "A"), (2, "B")], "k long, v string")
+    inferred, explicit = str(tmp_path / "inferred"), str(tmp_path / "explicit")
+    for p in (inferred, explicit):
+        upsert_by_key(spark, p, old, ["k"], n_kb=16)
+    upsert_by_key(spark, inferred, new, ["k"])
+    assert rows(inferred) == [(1, "A"), (2, "B")]
+    with pytest.raises(ValueError, match="n_kb"):
+        upsert_by_key(spark, explicit, new, ["k"], n_kb=8)
+    assert rows(explicit) == [(1, "a"), (2, "b")]
+    shutil.rmtree(os.path.join(explicit, "_scheme"))
+    with pytest.raises(ValueError, match="n_kb"):
+        upsert_by_key(spark, explicit, new, ["k"])
+    assert rows(explicit) == [(1, "a"), (2, "b")]
+
+
+def test_upsert_bucketed_evaluates_updates_once(spark, tmp_path):
+    """``updates`` feeds the touched-bucket set, the anti-join keys and
+    the union; a plan that yields a different row set on each
+    evaluation (a non-deterministic filter) must still neither
+    duplicate a key nor lose an existing one."""
+    import random
+
+    from lakehouse_to_rag_spark.sources.lakehouse import (
+        read_layer,
+        upsert_by_key,
+    )
+
+    path = str(tmp_path / "layer")
+    upsert_by_key(
+        spark, path,
+        spark.range(64).select(F.col("id").alias("k"), F.lit("old").alias("v")),
+        ["k"], n_kb=4,
+    )
+    coin = F.udf(lambda k: random.random() < 0.5, "boolean")
+    updates = (
+        spark.range(64)
+        .select(F.col("id").alias("k"), F.lit("new").alias("v"))
+        .filter(coin.asNondeterministic()("k"))
+    )
+    upsert_by_key(spark, path, updates, ["k"], n_kb=4)
+    keys = [r["k"] for r in read_layer(spark, path).collect()]
+    assert sorted(keys) == list(range(64))
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
