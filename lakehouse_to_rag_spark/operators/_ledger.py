@@ -14,7 +14,7 @@ Two crash classes threaten it (r13 self-review):
 - death MID scheme write — previously left a half-written ``_scheme``
   directory that *exists* but cannot be read, bricking every
   subsequent batch with an AnalysisException. Fixed here twice over:
-  ``write_scheme`` stages to a ``_scheme__tmp_*`` sibling and commits
+  ``write_scheme`` stages to a ``staged_dir`` sibling and commits
   it with ``sources.lakehouse.swap_dir`` (so the torn state can no
   longer be created), and ``read_scheme`` treats an unreadable
   record as ABSENT, routing the caller into the same migrate
@@ -30,7 +30,6 @@ ingest-loop discipline).
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -51,13 +50,14 @@ def migrate_ledger(
     reads only its colliding buckets."""
     from lakehouse_to_rag_spark.sources.lakehouse import (
         recover_dir,
+        staged_dir,
         swap_dir,
         write_layer,
     )
 
     recover_dir(path)
     rows = spark.read.parquet(path)
-    tmp = f"{path.rstrip('/')}__upsert_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(path)
     write_layer(
         rebucket(rows), tmp, partition_by=["bucket"], fmt="parquet"
     )
@@ -101,18 +101,19 @@ def write_scheme(
     spark: SparkSession, table_path: str, fields: dict[str, int]
 ) -> None:
     """Atomically record ``fields`` (int-valued) as the one-row
-    ``{table_path}/_scheme`` parquet: stage under ``_scheme__tmp_*``,
+    ``{table_path}/_scheme`` parquet: stage under ``staged_dir``,
     then ``swap_dir`` it into place (replacing any existing record) so
     no reader can ever observe a half-written one."""
     from lakehouse_to_rag_spark.sources.lakehouse import (
         recover_dir,
+        staged_dir,
         swap_dir,
         write_layer,
     )
 
     final = os.path.join(table_path, "_scheme")
     recover_dir(final)
-    tmp = f"{final}__tmp_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(final)
     schema = ", ".join(f"{k} int" for k in fields)
     from lakehouse_to_rag_spark.sources.tables import tiny_df
 

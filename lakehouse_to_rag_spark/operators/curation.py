@@ -1094,11 +1094,10 @@ def write_training_shards(
     document starts in, and those ids have no ``shard=N/`` directory.
     The ``_manifest`` is the shard list; never enumerate
     ``range(max_shard + 1)``."""
-    import uuid
-
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
         recover_dir,
+        staged_dir,
         swap_dir,
         write_layer,
     )
@@ -1111,7 +1110,7 @@ def write_training_shards(
     data = docs.join(assigned, id_col).select(
         F.col(id_col), "shard", "shuffle_key", "n_tokens", F.col(text_col)
     )
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(path)
     write_layer(
         data.repartition("shard").sortWithinPartitions(
             "shard", "shuffle_key"

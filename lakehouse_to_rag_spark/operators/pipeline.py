@@ -107,9 +107,10 @@ def run_medallion_incremental(
     marker, so the crash contract is unchanged. The admission count
     rides the one materialization the batch already paid (the lazy
     checkpoint's first action IS the count job). Each batch first
-    heals the three layers' swap remnants (``recover_dir``): a crash
-    in bronze's between-renames window would otherwise make the
-    admission read find no bronze and re-admit every re-crawled url.
+    heals the three layers' swap remnants, ``_kb=N`` buckets included
+    (``recover_dir``): a crash in a bronze swap's between-renames
+    window would otherwise make the admission read miss bronze (or
+    one bucket of it) and re-admit those re-crawled urls.
     """
     from pyspark.errors import AnalysisException
 

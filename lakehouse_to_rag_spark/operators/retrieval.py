@@ -347,6 +347,7 @@ def append_to_bm25_index(
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
         recover_dir,
+        staged_dir,
         swap_dir,
         write_layer,
     )
@@ -499,10 +500,8 @@ def append_to_bm25_index(
     # half-commit caveat above) but never TORN.
     # (tiny_df is already one slice — a coalesce(1) here used to cost
     # 4.5 s serially re-evaluating 32 pickled slices, see tables.py)
-    import uuid
-
     sdir = os.path.join(path, "_stats")
-    tmp = f"{sdir}._compact_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(sdir)
     write_layer(new_stats, tmp)
     swap_dir(tmp, sdir)
     return n
@@ -525,11 +524,11 @@ def rebuild_bm25_stats(spark, path: str) -> None:
     orphan ids. One pruned scan feeds both via a lazy checkpoint; each
     commits through ``swap_dir``, as on the append path."""
     import os
-    import uuid
 
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
         recover_dir,
+        staged_dir,
         swap_dir,
         write_layer,
     )
@@ -551,10 +550,10 @@ def rebuild_bm25_stats(spark, path: str) -> None:
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
         F.lit(n_buckets).cast("long").alias("n_buckets"),
     )
-    tmp = f"{sdir}._compact_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(sdir)
     write_layer(stats_df.coalesce(1), tmp)
     swap_dir(tmp, sdir)
-    itmp = f"{idir}._compact_{uuid.uuid4().hex[:8]}"
+    itmp = staged_dir(idir)
     write_layer(id_dl.select("id"), itmp)
     swap_dir(itmp, idir)
 

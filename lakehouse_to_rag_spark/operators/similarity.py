@@ -482,18 +482,18 @@ def _compact_index_layout(
     import os
     import pathlib
     import shutil
-    import uuid
 
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
         recover_dir,
+        staged_dir,
         swap_dir,
         write_layer,
     )
 
     recover_dir(path)
     df = read_layer(spark, path)
-    tmp = f"{path.rstrip('/')}._compact_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(path)
     if target_rows_per_file is None:
         out = df.repartition(partition_col)
     else:

@@ -15,6 +15,7 @@ given (e.g. source / date) so downstream reads prune partitions;
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 
@@ -22,11 +23,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# Remnant names a crash leaves beside a target: the suffixes callers
-# stage rewrites under, and the displaced old dir (``swap_dir`` writes
+# Remnant names a crash leaves beside a target: staged dirs
+# (``staged_dir``'s ``__upsert_``, then names earlier versions staged
+# under) and the displaced old dir (``swap_dir`` writes
 # ``.{name}._old_``; the other two are earlier versions' names).
 _STAGED = ("__upsert_", "._compact_", "__v_", "__tmp_")
 _DISPLACED = ("{}__old_", "{}._old_", ".{}._old_")
+# Reserved partition-column name for the key-bucketed upsert layout,
+# and the remnant of one of its buckets inside the layer root.
+_KB_COL = "_kb"
+_KB_REMNANT = re.compile(rf"\.?({_KB_COL}=\d+)(?:__|\._)")
+
+
+def staged_dir(target: str) -> str:
+    """A fresh path to write a rewrite of ``target`` under before
+    ``swap_dir`` commits it: a sibling (same filesystem) whose name
+    ``recover_dir(target)`` discards if the swap never happens."""
+    return f"{target.rstrip('/')}__upsert_{uuid.uuid4().hex[:8]}"
 
 
 def swap_dir(staged: str, target: str) -> None:
@@ -42,8 +55,9 @@ def swap_dir(staged: str, target: str) -> None:
     A crash at any step leaves a state ``recover_dir(target)`` heals:
     before the first rename the target is intact; between the renames
     only the old dir holds it; after the second the new one serves.
-    Staged paths must be siblings on the same filesystem, named with
-    one of ``_STAGED``'s suffixes so recovery can discard them."""
+    ``staged`` comes from ``staged_dir(target)``, or lies inside a dir
+    that came from ``staged_dir`` of ``target``'s layer (the bucketed
+    upsert's per-bucket swaps), so recovery can discard it."""
     head, name = os.path.split(target.rstrip("/"))
     if os.path.exists(target):
         old = os.path.join(head, f".{name}._old_{uuid.uuid4().hex[:8]}")
@@ -60,27 +74,44 @@ def recover_dir(target: str) -> None:
     intact); a missing ``target`` with a displaced old dir is the
     between-renames window, so the old dir (byte-complete) is renamed
     back; with ``target`` present, old dirs are deleted (death before
-    cleanup). Writers call it before reading what they rewrite;
-    readers never do, because a rename-back during a live writer's
-    between-renames window would make its second rename fail.
+    cleanup). The ``_kb=N`` buckets of a bucketed layer at ``target``
+    are healed the same way, since the bucketed upsert swaps them one
+    by one inside it. Writers call it before reading what they
+    rewrite; readers never do, because a rename-back during a live
+    writer's between-renames window would make its second rename fail.
 
-    Only names derived from ``target``'s own name are touched, never
-    the rest of its parent, so a concurrent swap of a sibling layer is
-    left alone. One ``listdir`` and nothing else when there is
-    nothing to repair; no glob, so paths holding ``[?*`` are safe."""
+    Only names derived from ``target``'s own name (and its buckets'
+    names inside it) are touched, never the rest of its parent, so a
+    concurrent swap of a sibling layer is left alone. One ``listdir``
+    of the parent and one of ``target``; no glob, so paths holding
+    ``[?*`` are safe."""
     head, name = os.path.split(target.rstrip("/"))
+    _heal(head, name)
     try:
-        names = sorted(os.listdir(head or "."))
-    except FileNotFoundError:
+        inner = os.listdir(target)
+    except (FileNotFoundError, NotADirectoryError):
         return
+    for b in sorted({m[1] for n in inner if (m := _KB_REMNANT.match(n))}):
+        _heal(target, b, inner)
+
+
+def _heal(head: str, name: str, names: list[str] | None = None) -> None:
+    """``recover_dir``'s repair of the one name ``name`` in dir
+    ``head``, whose listing is ``names`` (listed here when None)."""
+    if names is None:
+        try:
+            names = os.listdir(head or ".")
+        except FileNotFoundError:
+            return
     staged = tuple(name + s for s in _STAGED)
     displaced = tuple(p.format(name) for p in _DISPLACED)
     olds = []
-    for n in names:
+    for n in sorted(names):
         if n.startswith(staged):
             shutil.rmtree(os.path.join(head, n), ignore_errors=True)
         elif n.startswith(displaced):
             olds.append(os.path.join(head, n))
+    target = os.path.join(head, name)
     if olds and not os.path.exists(target):
         # single writer: the between-renames window holds one old dir
         os.rename(olds.pop(0), target)
@@ -178,10 +209,6 @@ def read_partitions(
     ).where(F.lit(False))
 
 
-# Reserved partition-column name for the key-bucketed upsert layout.
-_KB_COL = "_kb"
-
-
 def _kb_partition_dirs(path: str) -> list[str]:
     """The `_kb=<n>` partition dirs of a bucketed layer ([] for flat
     layouts / missing paths)."""
@@ -275,7 +302,7 @@ def upsert_by_key(
         existing = spark.read.format(fmt).load(path)
         keys = updates.select(*key_cols).distinct()
         merged = existing.join(keys, key_cols, "left_anti").unionByName(updates)
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(path)
     merged.write.format(fmt).save(tmp)
     swap_dir(tmp, path)
     return fmt
@@ -295,7 +322,8 @@ def _upsert_bucketed(
     non-deterministic plan cannot put a key in the anti-join but not
     the union. Only the touched ``_kb=N`` dirs are read
     (partition-pruned scan), merged, rewritten to a sibling staged
-    dir, and swapped per bucket. Untouched buckets' files are not
+    dir, and swapped per bucket (``recover_dir`` heals a crashed
+    bucket swap on the next upsert). Untouched buckets' files are not
     opened, read or rewritten — the file-count/pruning evidence is
     pinned by tests/test_sources.py."""
     from lakehouse_to_rag_spark.operators._ledger import (
@@ -320,7 +348,7 @@ def _upsert_bucketed(
     kb = _kb_col(key_cols, n_kb)
     up = updates.withColumn(_KB_COL, kb).localCheckpoint(eager=False)
     keys = up.select(*key_cols).distinct()
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(path)
     if recorded is None:
         # bootstrap, or the one-time migration of a flat layer: the
         # whole layer and its n_kb record land in one root swap
@@ -333,8 +361,6 @@ def _upsert_bucketed(
         write_scheme(spark, tmp, {"n_kb": n_kb})
         swap_dir(tmp, path)
         return fmt
-    for b in range(n_kb):
-        recover_dir(os.path.join(path, f"{_KB_COL}={b}"))
     touched = sorted(
         r[_KB_COL] for r in up.select(_KB_COL).distinct().collect()
     )
@@ -507,7 +533,7 @@ def compact_layer(
             if f.is_file()
         )
         target_files = max(1, math.ceil(size / target_file_bytes))
-    tmp = f"{path.rstrip('/')}._compact_{uuid.uuid4().hex[:8]}"
+    tmp = staged_dir(path)
     # coalesce narrows without a shuffle; growing the file count (re-
     # splitting an over-compacted layer) genuinely needs repartition
     parts = df.rdd.getNumPartitions()

@@ -612,7 +612,6 @@ def stream_scd2_sink(
     event-time order per key. Returns the started StreamingQuery."""
     import json
     import os
-    import uuid
 
     from lakehouse_to_rag_spark.operators.events import (
         scd2_apply_changes,
@@ -620,6 +619,7 @@ def stream_scd2_sink(
     )
     from lakehouse_to_rag_spark.sources.lakehouse import (
         recover_dir,
+        staged_dir,
         swap_dir,
     )
 
@@ -644,7 +644,7 @@ def stream_scd2_sink(
             new_dim = scd2_dimension(
                 batch, key_col, attr_col, ts_col, tiebreak_col
             )
-        tmp = f"{dim_path}__v_{uuid.uuid4().hex[:8]}"
+        tmp = staged_dir(dim_path)
         # the write ACTION reads the old files (still in place), so
         # the read-modify-write never overlaps its own input
         new_dim.write.parquet(tmp)

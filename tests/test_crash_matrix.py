@@ -11,8 +11,10 @@ after it, raises (the process dies there). Then:
 2. the next call heals: re-running the operation gives the new state;
 3. that call leaves no swap remnant anywhere under the state root.
 
-The bucketed upsert commits bucket by bucket, so its read is checked
-per key: every key's row is its old one or its new one.
+Bucketed layers commit bucket by bucket, so their read is checked per
+``_kb`` bucket: each bucket reads as its old rows or its new ones, or
+is empty while its displaced dir is parked (its between-renames
+window).
 """
 
 import contextlib
@@ -314,9 +316,11 @@ def _scd2_snap(spark, root):
     return {"dim": keyed(spark, f"{root}/dim", ["user_id", "version"])}
 
 
-def _medallion(batch):
+def _medallion(batch, n_kb=None):
     def run(spark, sf_dir, root):
-        run_medallion_incremental(spark, [batch(spark, sf_dir)], f"{root}/state")
+        run_medallion_incremental(
+            spark, [batch(spark, sf_dir)], f"{root}/state", upsert_buckets=n_kb
+        )
 
     return run
 
@@ -325,14 +329,19 @@ def _b1(spark, sf_dir):
     return documents_as_raw(docs(spark, sf_dir, 0, 8))
 
 
-def _b2(spark, sf_dir):
-    # new urls plus re-crawls of b1's, which admission must reject
-    recrawl = (
+def _recrawl(spark, sf_dir):
+    # re-crawls of b1's urls, which admission must reject
+    return (
         documents_as_raw(docs(spark, sf_dir, 0, 3))
         .withColumn("doc_id", F.col("doc_id") + 1000)
         .withColumn("content", F.concat(F.lit("RECRAWL "), "content"))
     )
-    return documents_as_raw(docs(spark, sf_dir, 8, 12)).unionByName(recrawl)
+
+
+def _b2(spark, sf_dir):
+    # new urls plus re-crawls
+    new = documents_as_raw(docs(spark, sf_dir, 8, 12))
+    return new.unionByName(_recrawl(spark, sf_dir))
 
 
 def _medallion_snap(spark, root):
@@ -363,27 +372,72 @@ CASES = {
     "run_medallion_incremental": (
         _medallion(_b1), _medallion(_b2), _medallion_snap, None
     ),
+    # a pure re-crawl wave: only bronze commits (bucket by bucket), and
+    # a crash in any bronze bucket's between-renames window must not
+    # let the next run's admission miss that bucket's urls
+    "run_medallion_bucketed": (
+        _medallion(_b1, 2), _medallion(_recrawl, 2), _medallion_snap, None
+    ),
+}
+# Cases whose layers commit bucket by bucket: target -> (its path
+# under the case root, its key columns).
+BUCKETED = {
+    "upsert_bucketed": {"layer": ("layer", ["k"])},
+    "run_medallion_bucketed": {
+        "bronze": ("state/bronze", ["doc_id"]),
+        "silver": ("state/silver", ["url"]),
+        "gold": ("state/gold", ["url", "chunk_index"]),
+    },
 }
 
 
-def _check_read(name, got, old, new, per_key):
+def bucket_of(spark, name, roots):
+    """``{target: {key: _kb}}`` of a bucketed case's layers under
+    ``roots`` (the bucket is a function of the key)."""
+    out = {}
+    for target, (rel, key_cols) in BUCKETED.get(name, {}).items():
+        rows = [
+            r
+            for root in roots
+            for r in spark.read.parquet(f"{root}/{rel}")
+            .select(*key_cols, "_kb").collect()
+        ]
+        out[target] = {tuple(r[c] for c in key_cols): r["_kb"] for r in rows}
+    return out
+
+
+def _check_read(name, work, got, old, new, kb):
     for target, pairs in got.items():
         if pairs is None:  # between-renames window: absent until healed
             continue
         keys = [k for k, _ in pairs]
         assert len(keys) == len(set(keys)), (name, target, "duplicate key")
-        if per_key:
-            allowed = set(old[target] or []) | set(new[target] or [])
-            assert set(pairs) <= allowed, (name, target, "mixed rows")
-        else:
+        if target not in kb:
             assert pairs in (old[target], new[target]), (name, target)
+            continue
+
+        def split(ps):
+            out = {}
+            for p in ps or []:
+                out.setdefault(kb[target][p[0]], []).append(p)
+            return out
+
+        got_b, old_b, new_b = split(pairs), split(old[target]), split(new[target])
+        parked = os.listdir(f"{work}/{BUCKETED[name][target][0]}")
+        for b in set(got_b) | set(old_b) | set(new_b):
+            rows = got_b.get(b, [])
+            if rows in (old_b.get(b, []), new_b.get(b, [])):
+                continue
+            assert not rows and f"_kb={b}" not in parked and any(
+                n.startswith(f"._kb={b}._old_") for n in parked
+            ), (name, target, b, "bucket is neither old nor new")
 
 
 @pytest.fixture(scope="module")
 def prepared(spark, sf_dir, tmp_path_factory):
     """Per case: the old state's root, its snapshot, the snapshot after
-    a clean run, and that run's rename/rmtree count. Built for all
-    cases concurrently."""
+    a clean run, that run's rename/rmtree count, and the key-to-bucket
+    map of a bucketed case. Built for all cases concurrently."""
     top = tmp_path_factory.mktemp("crash_matrix")
 
     def prepare(name):
@@ -394,10 +448,12 @@ def prepared(spark, sf_dir, tmp_path_factory):
         shutil.copytree(base, ref)
         arm(ref)
         op(spark, sf_dir, ref)
-        return name, (base, old, snap(spark, ref), calls[ref])
+        kb = bucket_of(spark, name, (base, ref))
+        return name, (base, old, snap(spark, ref), calls[ref], kb)
 
     with crash_gate() as (arm, calls), ThreadPoolExecutor(THREADS) as pool:
-        yield dict(pool.map(prepare, CASES))
+        cases = dict(pool.map(prepare, CASES))
+    yield cases
     # hundreds of concurrent tiny jobs grow the shared session's heap;
     # a full GC hands it back so later tests keep their memory headroom
     spark._jvm.java.lang.System.gc()
@@ -407,7 +463,7 @@ def prepared(spark, sf_dir, tmp_path_factory):
 def test_crash_at_every_swap_step(spark, sf_dir, tmp_path, prepared, name):
     _, op, snap, heal = CASES[name]
     heal = heal or op
-    base, old, new, n_calls = prepared[name]
+    base, old, new, n_calls, kb = prepared[name]
     assert n_calls >= 1, name
 
     def crash_then_heal(k):
@@ -418,7 +474,7 @@ def test_crash_at_every_swap_step(spark, sf_dir, tmp_path, prepared, name):
             op(spark, sf_dir, work)
         assert calls[work] == k, (name, k, "failed before its crash point")
         arm(work)
-        _check_read(name, snap(spark, work), old, new, name == "upsert_bucketed")
+        _check_read(name, work, snap(spark, work), old, new, kb)
         heal(spark, sf_dir, work)
         assert snap(spark, work) == new, (name, k)
         left = [p for p in pathlib.Path(work).rglob("*") if REMNANT.search(p.name)]
@@ -430,7 +486,8 @@ def test_crash_at_every_swap_step(spark, sf_dir, tmp_path, prepared, name):
 
 def test_os_rename_only_in_swap_primitive():
     """The package commits directories only through ``swap_dir`` and
-    heals them only through ``recover_dir``: no other ``os.rename(``."""
+    heals them only through ``recover_dir`` (and its ``_heal``): no
+    other ``os.rename(``."""
     import ast
 
     import lakehouse_to_rag_spark
@@ -440,7 +497,7 @@ def test_os_rename_only_in_swap_primitive():
     primitive = pkg / "sources" / "lakehouse.py"
     for node in ast.walk(ast.parse(primitive.read_text())):
         if isinstance(node, ast.FunctionDef) and node.name in (
-            "swap_dir", "recover_dir"
+            "swap_dir", "recover_dir", "_heal"
         ):
             allowed |= set(range(node.lineno, node.end_lineno + 1))
     hits = [

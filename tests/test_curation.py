@@ -809,7 +809,7 @@ class TestFingerprintLedgerLayout:
             == 4
         )
         # the atomic write leaves no staging remnant behind
-        assert not list(pathlib.Path(fp).glob("_scheme__tmp_*"))
+        assert not list(pathlib.Path(fp).glob("_scheme__*"))
 
 
 class TestBpeTokenizer:

@@ -2008,7 +2008,7 @@ class TestAdmitMediaBatch:
             .select("id").distinct().collect()
         )
         assert got == [0, 2, 10]
-        assert not list(pathlib.Path(table).glob("_scheme__tmp_*"))
+        assert not list(pathlib.Path(table).glob("_scheme__*"))
 
 
 class TestVideoKeyframeDedup:
